@@ -459,9 +459,16 @@ case class DeletionVariants(child: Expression) extends UnaryExpression {
   * embedding element this way, multiple plan branches each; same
   * promotion as [[WordNgrams]]/[[LongVecFold]]). Semantics mirror the
   * lambda form on its live domain: a NULL element stays NULL, finite
-  * values floor toward −∞ then narrow to BIGINT. (Non-finite elements
-  * would ANSI-error in the SQL cast; embeddings are parquet floats, and
-  * FxQuantSpec pins kernel == lambda over the real corpus.)
+  * values floor toward −∞ then narrow to BIGINT. An element with no
+  * BIGINT quantum — NaN, ±Infinity, or |x × 10⁴| past the BIGINT range —
+  * throws ([[FxQuantKernel.quant]]), in both the interpreted and the
+  * compiled path. Here the kernel is deliberately louder than the lambda:
+  * Spark's `floor` on a double narrows with a Java cast, so the SQL form
+  * saturates those elements to 0 or `Long.MaxValue`/`MinValue` and hands
+  * back a wrong vector without notice. The interpreted path probes every
+  * element for NULL whatever the child's `containsNull` claims (a
+  * hand-built schema can be wrong); codegen trusts the plan's metadata.
+  * FxQuantSpec pins kernel == lambda over the real corpus.
   */
 case class FxQuant(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType,
@@ -474,8 +481,6 @@ case class FxQuant(child: Expression) extends UnaryExpression {
   private def elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
   @transient private lazy val isFloat = elemIsFloat
-  @transient private lazy val hasNulls =
-    child.dataType.asInstanceOf[ArrayType].containsNull
 
   override def nullSafeEval(v: Any): Any = {
     val xs = v.asInstanceOf[ArrayData]
@@ -484,11 +489,9 @@ case class FxQuant(child: Expression) extends UnaryExpression {
     var i = 0
     while (i < m) {
       out(i) =
-        if (hasNulls && xs.isNullAt(i)) null
-        else {
-          val x = if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i)
-          math.floor(x * 10000.0).toLong
-        }
+        if (xs.isNullAt(i)) null
+        else FxQuantKernel.quant(
+          if (isFloat) xs.getFloat(i).toDouble else xs.getDouble(i))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -501,7 +504,8 @@ case class FxQuant(child: Expression) extends UnaryExpression {
       val i = ctx.freshName("i")
       val out = ctx.freshName("out")
       val nullProbe =
-        if (hasNulls) s"if ($c.isNullAt($i)) { $out[$i] = null; } else"
+        if (child.dataType.asInstanceOf[ArrayType].containsNull)
+          s"if ($c.isNullAt($i)) { $out[$i] = null; } else"
         else ""
       s"""
          |int $m = $c.numElements();
@@ -509,7 +513,7 @@ case class FxQuant(child: Expression) extends UnaryExpression {
          |for (int $i = 0; $i < $m; $i++) {
          |  $nullProbe
          |  $out[$i] = java.lang.Long.valueOf(
-         |    (long) Math.floor(((double) $c.$get($i)) * 10000.0));
+         |    graft.functions.FxQuantKernel.quant((double) $c.$get($i)));
          |}
          |${ev.value} =
          |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
@@ -518,6 +522,21 @@ case class FxQuant(child: Expression) extends UnaryExpression {
   }
   override protected def withNewChildInternal(c: Expression): FxQuant =
     copy(child = c)
+}
+
+/** Runtime kernel for [[FxQuant]], shared by its interpreted and compiled
+  * paths so both refuse the same inputs.
+  */
+object FxQuantKernel {
+  /** `floor(x × 10⁴)` as a BIGINT; throws when that has no BIGINT value.
+    * The bounds are exact doubles (±2⁶³), and NaN fails both comparisons.
+    */
+  def quant(x: Double): Long = {
+    val f = math.floor(x * 10000.0)
+    if (f >= -9.223372036854775808e18 && f < 9.223372036854775808e18) f.toLong
+    else throw new ArithmeticException(
+      s"fx_quant: element $x has no BIGINT fixed-point value (x 10^4)")
+  }
 }
 
 /** Runtime kernel for [[NfcNormalize]] — kept as a static helper so the

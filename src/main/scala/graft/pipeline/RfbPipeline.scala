@@ -57,7 +57,15 @@ case class PipelineReport(
   * Scale notes (100 TB): the manifest loop is driver-side over ~37 rows —
   * correct, it is metadata; all row-level work (CSV scan, parquet write,
   * counts) is distributed. Per-table scans list all corrected files in one
-  * `csv(paths:_*)` read so Spark parallelizes by file/split.
+  * `csv(paths:_*)` read so Spark parallelizes by file/split. The tables of
+  * a month load concurrently, largest first, at most `ioParallelism` at
+  * once: seven of the ten RFB tables are tiny, and loaded one after
+  * another their driver-side read → write → swap → read-back chains left
+  * the cluster idle between jobs.
+  *
+  * @param ioParallelism bound on the per-call IO pool: files downloaded or
+  *   extracted at once, and tables loaded at once (each table load is a
+  *   CSV read, a sink overwrite and a read-back count)
   */
 class RfbPipeline(
     spark: SparkSession,
@@ -105,7 +113,44 @@ class RfbPipeline(
   private def save(entries: Seq[ManifestEntry]): Unit =
     Manifest.save(manifestPath, entries)
 
-  /** Run `fn` over the pending indices on a bounded pool, folding each
+  /** `fn` over `items` on a pool of at most `ioParallelism` threads, the
+    * results in `items` order. The pool is created per call, so its
+    * threads inherit the caller's Spark local properties (job group,
+    * description, scheduler pool) and every job a task runs is attributed
+    * like the caller's own. On the first failure the remaining work is
+    * stopped and waited for (best-effort: a task hung in un-interruptible
+    * IO can outlive the window) so in-flight manifest writes quiesce
+    * before the caller unwinds; the real cause is rethrown, not the
+    * executor wrapper.
+    */
+  private def onIoPool[A, B](items: Seq[A])(fn: A => B): Seq[B] = {
+    if (items.isEmpty) return Seq.empty
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(ioParallelism, items.size)))
+    try {
+      val futures = items.map { a =>
+        pool.submit(new java.util.concurrent.Callable[B] {
+          override def call(): B = fn(a)
+        })
+      }
+      futures.map { f =>
+        try f.get()
+        catch {
+          case e: java.util.concurrent.ExecutionException =>
+            pool.shutdownNow()
+            val quiesced = pool.awaitTermination(
+              1, java.util.concurrent.TimeUnit.MINUTES)
+            val cause = e.getCause
+            if (!quiesced) cause.addSuppressed(new IllegalStateException(
+              "IO pool did not quiesce within 60 s; a hung task may still " +
+                "write the manifest"))
+            throw cause
+        }
+      }
+    } finally pool.shutdown()
+  }
+
+  /** Run `fn` over the pending indices on the IO pool, folding each
     * result into the manifest (and persisting it) AS EACH FILE COMPLETES —
     * the reference's crash-resume granularity (`main.py:103,120`), kept
     * under concurrency by serializing the update+save step. Download and
@@ -119,41 +164,14 @@ class RfbPipeline(
       pending: Seq[Int])(
       fn: ManifestEntry => ManifestEntry): Seq[ManifestEntry] = {
     @volatile var entries = entries0
-    if (pending.isEmpty) return entries
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(ioParallelism, pending.size)))
-    try {
-      val lock = new Object
-      val futures = pending.map { i =>
-        pool.submit(new Runnable {
-          override def run(): Unit = {
-            val updated = fn(entries0(i))
-            lock.synchronized {
-              entries = entries.updated(i, updated)
-              save(entries)
-            }
-          }
-        })
+    val lock = new Object
+    onIoPool(pending) { i =>
+      val updated = fn(entries0(i))
+      lock.synchronized {
+        entries = entries.updated(i, updated)
+        save(entries)
       }
-      futures.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // stop the remaining work and wait (best-effort: a task hung in
-            // un-interruptible IO can outlive the window) so in-flight
-            // manifest writes quiesce before the caller unwinds; rethrow
-            // the real cause, not the executor wrapper
-            pool.shutdownNow()
-            val quiesced = pool.awaitTermination(
-              1, java.util.concurrent.TimeUnit.MINUTES)
-            val cause = e.getCause
-            if (!quiesced) cause.addSuppressed(new IllegalStateException(
-              "IO pool did not quiesce within 60 s; a hung task may still " +
-                "write the manifest"))
-            throw cause
-        }
-      }
-    } finally pool.shutdown()
+    }
     entries
   }
 
@@ -415,7 +433,10 @@ class RfbPipeline(
   }
 
   /** Phase 5 — load + count audit (reference `main.py:164-220`), grouped per
-    * destination table with a single atomic overwrite per table.
+    * destination table with a single atomic overwrite per table. Tables
+    * load concurrently on the IO pool, largest corrected-file bytes first,
+    * at most `ioParallelism` at once; the manifest transitions follow the
+    * join, so a crash mid-load leaves every routed entry `pendente`.
     */
   def load(entries0: Seq[ManifestEntry]): Seq[ManifestEntry] = {
     lastLoadErrors = Map.empty
@@ -488,10 +509,16 @@ class RfbPipeline(
       case (i, f, Some(t)) if pendingTables(t) =>
         (t, i, f, lineCounts.getOrElse(f, -1L))
     }.groupBy(_._1)
-    val tableOk = byTable.map { case (table, group) =>
+    // largest first (corrected-file bytes), so the biggest table starts at
+    // once instead of becoming the tail; each task returns (table, ok,
+    // audit, error) and the shared records are assigned after the join
+    val largestFirst = byTable.toSeq.sortBy { case (t, g) =>
+      (-g.map(x => new java.io.File(x._3).length).sum, t)
+    }
+    val loads = onIoPool(largestFirst) { case (table, group) =>
       val paths = group.map(_._3)
       val expected = group.map(_._4).sum
-      val ok =
+      val (ok, audit, error) =
         try {
           // arity from the routing layer's layout knowledge, NOT sniffed
           // from the first line of the first file: a blank/short first
@@ -534,9 +561,8 @@ class RfbPipeline(
               val a = Audits.run(sink.readBack(spark, table, refMonth), table)
               (a, a.rows)
             }
-          lastAudits += table -> audit
-          audit.rows == expected && loaded == expected &&
-            (!strictAudits || audit.passed)
+          (audit.rows == expected && loaded == expected &&
+            (!strictAudits || audit.passed), Some(audit), None)
         } catch {
           case e: Exception =>
             // the failure becomes a falhou status either way, but the
@@ -544,12 +570,14 @@ class RfbPipeline(
             // not vanish — Reporter.failed only fires on run-level
             // crashes, so an operator debugging a per-table falhou had
             // zero root-cause signal (r15 review)
-            lastLoadErrors += table -> e.toString
             System.err.println(s"load: table $table failed: $e")
-            false
+            (false, None, Some(e.toString))
         }
-      table -> ok
+      (table, ok, audit, error)
     }
+    lastAudits = loads.collect { case (t, _, Some(a), _) => t -> a }.toMap
+    lastLoadErrors = loads.collect { case (t, _, _, Some(e)) => t -> e }.toMap
+    val tableOk = loads.map(l => l._1 -> l._2).toMap
     // propagate per-table audit to contributing entries
     candidates.foreach { case (_, i) =>
       val e = entries(i)

@@ -261,12 +261,15 @@ class ParquetSink(outDir: String, versioned: Boolean = false)
   * Spark's default type mapping.
   *
   * Scale notes (100 TB): the INSERT fan-in is bounded by the database, not
-  * Spark — `numPartitions` caps concurrent connections and `batchsize`
-  * amortizes round-trips (the reference's `method='multi', chunksize=10000`,
-  * `main.py:205`). [[readBack]] is used by the pipeline only for the
-  * `COUNT(*)` audit, which the JDBC source pushes down to the database; a
-  * parallel analytical re-read would add `partitionColumn/lowerBound/
-  * upperBound` instead.
+  * Spark — `numPartitions` caps concurrent connections per table and
+  * `batchsize` amortizes round-trips (the reference's `method='multi',
+  * chunksize=10000`, `main.py:205`). [[RfbPipeline]] loads up to
+  * `ioParallelism` tables at once, so peak connections are up to
+  * `ioParallelism × numPartitions` (plus one schema probe per table in
+  * flight). [[readBack]] is used by the pipeline only for the `COUNT(*)`
+  * audit, which the JDBC source pushes down to the database; a parallel
+  * analytical re-read would add `partitionColumn/lowerBound/upperBound`
+  * instead.
   *
   * `copy` switches the DATA path to bulk `COPY FROM STDIN` — the throughput
   * upgrade the reference's README claims but its code never delivers

@@ -253,7 +253,7 @@ object Rehearse {
     * caught by this harness's own smoke run). Distributed — no driver-side
     * row traffic.
     */
-  private[tools] def fingerprint(df: DataFrame): (Long, BigDecimal) = {
+  private[graft] def fingerprint(df: DataFrame): (Long, BigDecimal) = {
     val h = xxhash64(df.columns.map(col).toSeq: _*)
     val row = df
       .agg(count(lit(1)).as("n"),

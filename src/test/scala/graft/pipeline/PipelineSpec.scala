@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import java.util.zip.{ZipEntry, ZipOutputStream}
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -379,20 +381,28 @@ class PipelineSpec extends AnyFunSuite {
     assert(done.head.statusCarga == Status.Sucesso)
   }
 
-  test("concurrent download+extract: many files, mixed failures, " +
-    "manifest lands consistent") {
-    val (src, work, out) = freshDirs()
+  /** Six one-row dimension archives, each routed to its own table. */
+  private def sixTableMonth(src: Path): Seq[String] = {
     val tables = Seq("MOTIV", "MUNIC", "PAIS", "NATJU", "QUALS", "CNAECSV")
     val zips = tables.zipWithIndex.map { case (t, i) =>
       val name = s"Z$i.zip"
       mkZip(src, name, Seq(
         s"K$i.D509.$t" -> s"0$i;registro $i\n".getBytes(StandardCharsets.UTF_8)))
       name
-    } :+ "Dead.zip" // never downloadable
-    mkZip(src, "Dead.zip", Seq(
-      "K9.D509.MOTIV" -> "09;x\n".getBytes(StandardCharsets.UTF_8)))
+    }
     Files.write(src.resolve("listing.html"),
       listingHtml(zips).getBytes(StandardCharsets.UTF_8))
+    zips
+  }
+
+  test("concurrent download+extract: many files, mixed failures, " +
+    "manifest lands consistent") {
+    val (src, work, out) = freshDirs()
+    val zips = sixTableMonth(src)
+    mkZip(src, "Dead.zip", Seq( // never downloadable
+      "K9.D509.MOTIV" -> "09;x\n".getBytes(StandardCharsets.UTF_8)))
+    Files.write(src.resolve("listing.html"),
+      listingHtml(zips :+ "Dead.zip").getBytes(StandardCharsets.UTF_8))
 
     val pipe = new RfbPipeline(spark, work, out.toString, "202601",
       new LocalFetcher(src, failFirst = Map(
@@ -401,9 +411,7 @@ class PipelineSpec extends AnyFunSuite {
       backoffMs = 0L, ioParallelism = 4)
     val done = pipe.run("file://rfb/")
     val byName = done.map(e => e.arquivo -> e).toMap
-    tables.indices.foreach { i =>
-      assert(byName(s"Z$i.zip").statusCarga == Status.Sucesso, s"Z$i.zip")
-    }
+    zips.foreach(z => assert(byName(z).statusCarga == Status.Sucesso, z))
     assert(byName("Dead.zip").statusDownload == Status.Falhou)
     assert(byName("Dead.zip").tentativasDownload == 1)
     // persisted manifest agrees with the in-memory result
@@ -495,5 +503,94 @@ class PipelineSpec extends AnyFunSuite {
       "/tmp/o", "202601", new LocalFetcher(Files.createTempDirectory("s")))
     val html = listingHtml(Seq("Empresas0.zip", "Socios1.zip"))
     assert(pipe.parseListing(html) == Seq("Empresas0.zip", "Socios1.zip"))
+  }
+
+  test("concurrent load: one table fails, every other table's result is kept") {
+    val (src, work, out) = freshDirs()
+    sixTableMonth(src)
+    val pipe = new RfbPipeline(spark, work, out.toString, "202601",
+      new LocalFetcher(src), backoffMs = 0L, ioParallelism = 4)
+    val fixed = pipe.fix(pipe.extract(pipe.download(pipe.plan("file://rfb/"))))
+    val victim = fixed.find(_.arquivo == "Z2.zip").get // routes to rfb_paises
+    Files.delete(java.nio.file.Paths.get(victim.arquivosCorrigidos.head))
+    val done = pipe.load(fixed)
+    val byName = done.map(e => e.arquivo -> e).toMap
+    assert(byName("Z2.zip").statusCarga == Status.Falhou)
+    assert(pipe.lastLoadErrors.keySet == Set("rfb_paises"),
+      pipe.lastLoadErrors.toString)
+    val others = done.filterNot(_.arquivo == "Z2.zip")
+    others.foreach(e => assert(e.statusCarga == Status.Sucesso, e.toString))
+    // every other table's audit survived the concurrent loads
+    assert(pipe.lastAudits.keySet ==
+      others.flatMap(_.tabelasDestino).toSet, pipe.lastAudits.toString)
+    assert(pipe.lastAudits.size == 5)
+    assert(Manifest.load(spark, pipe.manifestPath).toSet == done.toSet)
+  }
+
+  test("load parallelism does not change the manifest or the tables") {
+    val src = Files.createTempDirectory("rfb-src")
+    val (_, expected) = graft.tools.Rehearse.gen(src, 300)
+    def ingest(par: Int): (Seq[ManifestEntry], ParquetSink) = {
+      val work = Files.createTempDirectory("rfb-work")
+      val out = Files.createTempDirectory("rfb-out").toString
+      val pipe = new RfbPipeline(spark, work, out, "202601",
+        new LocalFetcher(src), backoffMs = 0L, ioParallelism = par)
+      (pipe.run("file://rfb/"), new ParquetSink(out))
+    }
+    val (serial, serialLake) = ingest(1)
+    val (parallel, parallelLake) = ingest(4)
+    def outcome(m: Seq[ManifestEntry]) = m.map(e =>
+      e.arquivo -> (e.statusCarga, e.registrosCarregados)).toMap
+    assert(outcome(parallel) == outcome(serial))
+    assert(serial.count(_.statusCarga == Status.Sucesso) == serial.size - 1,
+      "every archive but the corrupt one loads")
+    expected.foreach { case (t, n) =>
+      val a = graft.tools.Rehearse.fingerprint(
+        serialLake.readBack(spark, t, "202601"))
+      val b = graft.tools.Rehearse.fingerprint(
+        parallelLake.readBack(spark, t, "202601"))
+      assert(a._1 == n, s"$t rows")
+      assert(b == a, s"$t differs between ioParallelism 1 and 4")
+    }
+  }
+
+  test("load jobs carry the caller's job group and description") {
+    val (src, work, out) = freshDirs()
+    sixTableMonth(src)
+    val pipe = new RfbPipeline(spark, work, out.toString, "202601",
+      new LocalFetcher(src), backoffMs = 0L, ioParallelism = 4)
+    val fixed = pipe.fix(pipe.extract(pipe.download(pipe.plan("file://rfb/"))))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add((e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    val sc = spark.sparkContext
+    // the bus delivers in order, so the jobs seen between two marker jobs
+    // are exactly the jobs started between them
+    def mark(m: String): Unit = {
+      sc.setJobGroup(m, m)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains((m, m)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark("before")
+      sc.setJobGroup("rfb-load-group", "load 202601")
+      val done = try pipe.load(fixed) finally sc.clearJobGroup()
+      assert(done.forall(_.statusCarga == Status.Sucesso))
+      mark("after")
+      val loadJobs = seen.asScala.toSeq
+        .dropWhile(_ != (("before", "before"))).drop(1)
+        .takeWhile(_ != (("after", "after")))
+      assert(loadJobs.size > 6, s"one job per table at least: $loadJobs")
+      assert(loadJobs.forall(_ == (("rfb-load-group", "load 202601"))),
+        loadJobs.toString)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -27,7 +27,9 @@ echo "compile OK"
 TOUCHED=$(git diff --name-only "$SINCE" -- 'src/main/scala/**' 2>/dev/null || true)
 SPECS="graft.streaming.* *QueriesSpec"
 declare -A FAM=(
-  [pipeline]="graft.pipeline.*"
+  # the kill -9 crash-resume gate halts mid-load, so any pipeline change
+  # (load concurrency above all) must pass it too
+  [pipeline]="graft.pipeline.* graft.tools.RehearsalGateSpec"
   [operators]="graft.operators.*"
   [functions]="graft.functions.*"
   [sources]="graft.sources.* *SourceFormatsSpec"
